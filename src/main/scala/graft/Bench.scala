@@ -261,13 +261,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: initialize the session, JIT the parquet reader and codegen
     // paths once, so per-query timings measure the queries, not JVM startup.

@@ -1,10 +1,13 @@
 package graft.exec
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
-/** Scale-adaptive shuffle/state partitioning for runner-owned streaming
-  * queries (guide §2: derive partitioning from input size instead of a
-  * constant tuned for either local mode or the cluster).
+/** The one way a runner stream starts: [[run]] takes the stream's
+  * DataFrame and its writer chain, starts the query, awaits it, and
+  * records its lifecycle — with the stream's state partitioning derived
+  * from its input size (guide §2: derive partitioning from input size
+  * instead of a constant tuned for either local mode or the cluster).
   *
   * WHY: a stateful streaming operator creates one state-store instance per
   * shuffle partition — a stream-stream join keeps FOUR per partition — and
@@ -16,38 +19,42 @@ import org.apache.spark.sql.DataFrame
   * measured the SAME stream gates 2× faster at 8 cores/partitions than at
   * 32 because of exactly this, and per-store commit cost dominates harder
   * the larger the cluster. The fix is the broadcast-join-threshold posture:
-  * derive the stream's partition count from its (listed) source bytes, and
-  * NEVER exceed the session's configured parallelism — a large input keeps
-  * the cluster's setting, a small one stops minting empty state stores.
+  * derive the stream's partition count from its (listed) source bytes at
+  * 128 MiB per partition, and NEVER exceed the session's configured
+  * parallelism — a large input keeps the cluster's setting, a small one
+  * stops minting empty state stores.
   *
-  * The derived value only applies at the stream's FIRST start: Spark pins
-  * `spark.sql.shuffle.partitions` (with the other state-relevant confs) in
-  * the checkpoint's offset log and re-applies it on every restart, so a
-  * landing directory that grows across runs cannot re-shape existing state.
-  *
-  * Config (session confs, overridable per pipeline via pipeline_config
-  * `configuration`):
-  *   - `spark.graft.stream.shufflePartitions`: `auto` (default) = derive;
-  *     an integer = use exactly that for runner streams; `off` = leave the
-  *     session value untouched.
-  *   - `spark.graft.stream.bytesPerPartition` (default 128 MB): target
-  *     source bytes per stream partition in auto mode.
+  * The derived value reaches the query through a session CLONE the plan is
+  * rebound onto; the runner's own session conf is never written, so batch
+  * work planned concurrently on other flowgroup threads always sees the
+  * session's value. It only applies at the stream's FIRST start: Spark
+  * pins `spark.sql.shuffle.partitions` (with the other state-relevant
+  * confs) in the checkpoint's offset log and re-applies it on every
+  * restart, so a landing directory that grows across runs cannot re-shape
+  * existing state.
   */
 object StreamTuning {
 
-  val ModeKey = "spark.graft.stream.shufflePartitions"
-  val BytesPerPartitionKey = "spark.graft.stream.bytesPerPartition"
-  private val DefaultBytesPerPartition = 128L * 1024 * 1024
+  private val BytesPerPartition = 128L * 1024 * 1024
 
   /** Listing guard: past this many files the source is "large" without
-    * finishing the walk — the answer (clamp to the session value) is
-    * already known, and an unbounded listing would itself become the cost. */
+    * finishing the walk — the answer (keep the session value) is already
+    * known, and an unbounded listing would itself become the cost. */
   private val MaxListedFiles = 20000
+
+  // stream lifecycle seconds (nanos, so concurrent adds never lose
+  // fractions) — wall(start→termination) minus Spark's triggerExecution
+  // work; the bench drains it as gate scaffolding
+  private val lifecycleNanos = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Return and reset the recorded stream lifecycle seconds. */
+  def drainLifecycleSec(): Double = lifecycleNanos.getAndSet(0L) / 1e9
 
   /** Sum the on-disk bytes of every file-backed streaming source in the
     * plan. None when the plan has no recognizable file-backed streaming
     * source (kafka, rate, custom providers) or a listing fails — callers
-    * must then leave the session configuration alone. */
+    * must then leave the session configuration alone. `Long.MaxValue`
+    * stands for "more files than the listing guard". */
   def inputBytes(df: DataFrame): Option[Long] = try {
     // the ANALYZED plan — temp-view references (every transform chain in
     // the runner) are unresolved leaves in the raw logical plan
@@ -96,12 +103,7 @@ object StreamTuning {
   /** True when the stream plan itself carries a stateful operator
     * (aggregation, dedup, stream-stream join, …) — the shapes that mint
     * one state store per shuffle partition per operator. Streams WITHOUT
-    * one (passthrough appends, foreachBatch merge engines) are left at
-    * the session setting on purpose: they hold no per-partition state to
-    * save on, and a foreachBatch body's jobs run against the CLONED
-    * session conf, so a value derived from the (small) stream source
-    * would silently under-partition a merge that rewrites a large
-    * target. */
+    * one (passthrough appends) hold no per-partition state to save on. */
   private def hasStatefulOp(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     val plan = df.queryExecution.analyzed
@@ -115,81 +117,57 @@ object StreamTuning {
     }
   }
 
-  /** The partition count for a runner stream over `df`, or None to leave
-    * the session value in place. Auto mode: ceil(bytes / target), clamped
-    * to [1, session shuffle partitions] — never ABOVE the configured
-    * parallelism, and only for plans that actually carry streaming state. */
-  def derivePartitions(df: DataFrame): Option[Int] = {
-    val spark = df.sparkSession
-    val session = spark.sessionState.conf.numShufflePartitions
-    spark.conf.getOption(ModeKey).getOrElse("auto") match {
-      case "off" => None
-      case "auto" if !hasStatefulOp(df) => None
-      case "auto" =>
-        inputBytes(df).map { bytes =>
-          val per = spark.conf.getOption(BytesPerPartitionKey)
-            .map(_.toLong).getOrElse(DefaultBytesPerPartition)
-          val derived = math.max(1L, (bytes + per - 1) / per)
-          math.min(derived, session.toLong).toInt
-        }.filter(_ < session) // only act when it actually shrinks
-      case n => scala.util.Try(n.trim.toInt).toOption.filter(_ > 0)
-    }
+  /** ceil(bytes / 128 MiB), at least 1, or None when that does not fall
+    * below `session` — never ABOVE the configured parallelism, and the
+    * listing guard's `Long.MaxValue` keeps the session value. Written
+    * without `bytes + per - 1`, which wraps negative near Long.MaxValue. */
+  def partitionsFor(bytes: Long, session: Int): Option[Int] = {
+    val derived = math.max(1L,
+      bytes / BytesPerPartition + (if (bytes % BytesPerPartition > 0) 1 else 0))
+    if (derived < session) Some(derived.toInt) else None
   }
 
-  // stream starts serialize through this lock: the conf set/restore window
-  // below is process-global state, and two orchestrator flowgroup threads
-  // starting streams concurrently could otherwise restore each other's
-  // derived value into place permanently
-  private val startLock = new Object
+  /** The partition count for a runner stream over `df`, or None to keep
+    * the session value: only plans that carry streaming state, and never
+    * for a sink that merges into or rewrites an existing target — a
+    * foreachBatch body's jobs run on the stream's session, so a value
+    * derived from the (small) stream source would under-partition a merge
+    * against a large target. */
+  def derivePartitions(df: DataFrame, merges: Boolean): Option[Int] =
+    if (merges || !hasStatefulOp(df)) None
+    else inputBytes(df).flatMap(partitionsFor(_,
+      df.sparkSession.sessionState.conf.numShufflePartitions))
 
-  /** Start a writeStream with the adaptive scope applied: the writer's
-    * underlying Dataset drives the derivation. Reflection (the `ds` field
-    * of the classic DataStreamWriter) because the API deliberately does
-    * not expose it; an unexpected writer shape falls back to a plain
-    * unscoped start. */
-  def startAdaptive(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val df: Option[DataFrame] = try {
-      val f = w.getClass.getDeclaredField("ds")
-      f.setAccessible(true)
-      Some(f.get(w).asInstanceOf[DataFrame])
-    } catch { case scala.util.control.NonFatal(_) => None }
-    df match {
-      case Some(d) => scoped(d)(w.start())
-      case None => w.start()
+  /** Start the stream `write` configures over `df`, run it to termination
+    * and record its NON-WORK wall as lifecycle: wall(start→termination)
+    * minus the sum of the query's `triggerExecution` durations (Spark's
+    * own per-trigger plan + exactly-once cost). What's left is derivation,
+    * checkpoint recovery, trigger polling gaps and stop/teardown. Recording
+    * happens in a `finally`, so a failed query's lifecycle still counts.
+    * `merges` marks a sink that merges into or rewrites an existing target
+    * (see [[derivePartitions]]). When a count is derived, the plan runs on
+    * a session clone carrying it; the clone's query manager is unhooked
+    * from the shared listener bus once the query ends, so neither the
+    * clone nor the query handle outlives this call. */
+  def run(df: DataFrame, merges: Boolean)(
+      write: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val t0 = System.nanoTime()
+    val (bound, detach) = derivePartitions(df, merges) match {
+      case None => (df, () => ())
+      case Some(n) => org.apache.spark.sql.graftnative.PlanBridge
+        .onClone(df, "spark.sql.shuffle.partitions", n.toString)
     }
-  }
-
-  /** Run `start` (a writeStream `.start()` chain, by name) with the
-    * session's `spark.sql.shuffle.partitions` temporarily set to the
-    * derived value — StreamExecution clones the session synchronously
-    * inside `start()`, so the clone captures the scoped value and the
-    * session's own value is restored before anything else plans against
-    * it. No-op when derivation declines. */
-  def scoped[T](df: DataFrame)(start: => T): T = {
-    val derived = derivePartitions(df)
-    // opt-in visibility: one stderr line per stream start naming the
-    // decision (debug seam — the A/B harness and operators read it)
-    if (df.sparkSession.conf.getOption("spark.graft.stream.debug")
-        .contains("true"))
-      System.err.println(s"[graft] stream-tuning: stateful=" +
-        s"${hasStatefulOp(df)} bytes=${inputBytes(df)} derived=$derived leaves=" +
-        df.queryExecution.analyzed.collectLeaves()
-          .map(_.getClass.getSimpleName).distinct.mkString(","))
-    derived match {
-      case None => start
-      case Some(n) => startLock.synchronized {
-        val spark = df.sparkSession
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, n.toString)
-        try start finally {
-          prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-        }
+    var q: StreamingQuery = null
+    try { q = write(bound.writeStream).start(); q.awaitTermination() }
+    finally {
+      detach()
+      if (q != null) {
+        val wall = (System.nanoTime() - t0) / 1e9
+        val work = q.recentProgress.iterator.map { p =>
+          Option(p.durationMs.get("triggerExecution"))
+            .fold(0.0)(_.toDouble / 1000.0)
+        }.sum
+        lifecycleNanos.addAndGet((math.max(0.0, wall - work) * 1e9).toLong)
       }
     }
   }

@@ -2098,15 +2098,17 @@ object Extras {
     // on the gate's critical path (guide §2.6 — overlap independent work;
     // the child touches no shared state until the run command arrives)
     val pendingChild = graft.tools.CrawlResumeChild.spawnEager()
-    // generation 1: full run in-process
-    copyFixture(s"$fixture/a", landing, "a-")
-    runInProcess()
-    // generation 2: a child JVM that hard-halts right after the dedup MV
-    // commits — ingest + dedup state is on disk, index/mix/final never ran
-    copyFixture(s"$fixture/b", landing, "b-")
-    val tChild = System.nanoTime()
-    val (code, out) = pendingChild.run(
-      s"$wh/wh", s"$wh/cp", yamlDir, "c15_corpus")
+    val (code, out, tChild) = try {
+      // generation 1: full run in-process
+      copyFixture(s"$fixture/a", landing, "a-")
+      runInProcess()
+      // generation 2: a child JVM that hard-halts right after the dedup MV
+      // commits — ingest + dedup state is on disk, index/mix/final never ran
+      copyFixture(s"$fixture/b", landing, "b-")
+      val t0 = System.nanoTime()
+      val (c, o) = pendingChild.run(s"$wh/wh", s"$wh/cp", yamlDir, "c15_corpus")
+      (c, o, t0)
+    } finally pendingChild.destroy()
     // the child's wall clock is JVM boot + session lifecycle + one crawl
     // generation — gate scaffolding, not this engine's plan cost; record
     // it so the bench can report plan_cost beside total

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.tools.GateLifecycle.TrackedStart
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -73,15 +71,14 @@ object Monitoring {
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               val schema = spark.read.parquet(path).schema
-              spark.readStream.schema(schema).parquet(path)
-                .writeStream
+              graft.exec.StreamTuning.run(
+                  spark.readStream.schema(schema).parquet(path), merges = false)(_
                 .foreachBatch { (b: DataFrame, id: Long) =>
                   b.write.mode("overwrite")
                     .parquet(s"$targetPath/_pipeline=$escaped/_batch=$id")
                 }
                 .option("checkpointLocation", s"$checkpointRoot/monitor_$escaped")
-                .trigger(Trigger.AvailableNow())
-                .startTracked()
+                .trigger(Trigger.AvailableNow()))
             }
           })
         }

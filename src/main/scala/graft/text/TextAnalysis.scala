@@ -100,15 +100,15 @@ object TextAnalysis {
     * repetition rules. Every signal is an in-row columnar expression —
     * zero exchanges — and since r13 every signal is CODEGEN-FRIENDLY: the
     * original higher-order filter() signals were CodegenFallback in Spark
-    * 4.1 (interpreted per row) and a 10× probe (GopherHofProbe) measured
+    * 4.1 (interpreted per row) and a 10×-data A/B measured
     * the interpreted pass at ~2× the cost of the equivalent
     * literal-replace/regex forms, so line ratios count boundary needles
     * ("\n•", "...\n") by replace length-diff, the alpha ratio is one
     * whole-text regex scan over space-bounded tokens ([^ ] deliberately
     * matches \n — tokens split on SINGLE SPACES, the t3/t6 convention, so
     * "x...\ny" is one word), and stopword hits sum eight codegen'd
-    * array_contains terms. The probe pins the rewrite row-identical to the
-    * HOF forms on fixture + adversarial rows. Every ratio is emitted at
+    * array_contains terms. TextAnalysisSpec pins the rewrite row-identical
+    * to the HOF forms on fixture + adversarial rows. Every ratio is emitted at
     * round-6 with `gopher_keep` computed from the ROUNDED values, so the
     * keep decision is reproducible cross-engine (the d5/t16 posture).
     * Lines split on \n; words on single spaces. */
@@ -146,7 +146,7 @@ object TextAnalysis {
     // space-padded text. [^ ] deliberately matches \n: words split on
     // SINGLE SPACES (the t3/t6 convention), so a newline-embedded token
     // like "x...\ny" is ONE word — normalizing \n first would silently
-    // double-count it (GopherHofProbe pins the equivalence on adversarial
+    // double-count it (TextAnalysisSpec pins the equivalence on adversarial
     // rows the fixture's vocabulary cannot produce)
     val alphaWords = size(regexp_extract_all(
       concat(lit(" "), t, lit(" ")), lit(" [^ ]*[A-Za-z][^ ]*(?= )"), lit(0)))

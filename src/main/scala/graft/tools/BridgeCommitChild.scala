@@ -38,12 +38,7 @@ object BridgeCommitChild {
 
   def main(args: Array[String]): Unit = {
     val Array(bridge, dir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     bridge match {
       case "avro" =>

@@ -44,6 +44,11 @@ object ChildJvm {
       drainer.join(10000)
       (code, out.synchronized(new String(out.toByteArray, "UTF-8")))
     }
+
+    /** Kill the child (a no-op once it has exited) and wait up to 10 s
+      * for it to go; true when it has. */
+    def destroy(): Boolean =
+      proc.destroyForcibly().waitFor(10, java.util.concurrent.TimeUnit.SECONDS)
   }
 
   /** Start the child NOW and return without waiting: JVM + session boot

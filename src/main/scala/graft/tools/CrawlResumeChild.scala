@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Crash-forge fixture for the c15 sustained-crawl capstone and the
   * kill-point matrix: a SECOND JVM that runs one orchestrated generation
   * against a shared warehouse and HARD-HALTS (`Runtime.halt` — no shutdown
@@ -37,23 +35,13 @@ object CrawlResumeChild {
       if (args.headOption.contains("--server")) {
         // touch the session so the boot genuinely happens before the
         // command arrives (getOrCreate below then no-ops)
-        SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", 4)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate(): Unit
+        graft.GraftSession.builder("local[4]").getOrCreate(): Unit
         val line = Option(scala.io.StdIn.readLine()).getOrElse(
           sys.error("CrawlResumeChild --server: stdin closed before a command arrived"))
         line.trim.split('\u001f')
       } else args
     val Array(wh, cp, yamlDir, haltSpec) = runArgs
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val store = new graft.exec.TableStore(spark, wh)
     def haltNow(marker: String): Unit = {
@@ -124,6 +112,9 @@ object CrawlResumeChild {
       child.send(Seq(wh, cp, yamlDir, haltSpec).mkString("\u001f"))
       child.await()
     }
+    /** Kill the child if it is still up — a gate that fails before
+      * [[run]] must not leave a booted server JVM blocked on stdin. */
+    def destroy(): Boolean = child.destroy()
   }
 
   def spawnEager(): Pending =

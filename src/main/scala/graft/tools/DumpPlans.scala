@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dump `.explain("formatted")` for the named queries (or all) to one file
@@ -27,12 +26,7 @@ object DumpPlans {
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(outDir)
     val names =

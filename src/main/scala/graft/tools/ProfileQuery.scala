@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query profiling harness: run one registry query N times with the
   * runner's per-action timing lines enabled (`spark.graft.timing`), so a
   * slow gate decomposes into WHICH pipeline action pays — the diagnosis
@@ -25,12 +23,7 @@ object ProfileQuery {
     // same parallelism contract as Bench.main — profiling at a different
     // core/partition count than the bench would diagnose the wrong action
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.graft.timing", "true")
     // SPARK_GRAFT_JOBLOG=1: one stderr line per Spark job (duration +

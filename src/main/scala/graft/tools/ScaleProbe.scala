@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity probe: replicate the `documents` fixture K× (unique ids,
@@ -38,13 +38,7 @@ object ScaleProbe {
         sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT",
           s"${sys.props("user.dir")}/probe_full.json")),
         probeLines.mkString("\n"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text")

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch A/B harness (round 19): run selected queries with TWO
   * alternating conf sets inside ONE JVM/session — the tightest possible
   * control against host noise (same caches, same JIT, interleaved in
-  * time). The round-19 optimizations are conf-gated, so A (off) vs B
-  * (auto) measures them without rebuilding. Not a contract surface.
+  * time). Any conf-gated change (a session conf set differently per
+  * side) measures without rebuilding. Not a contract surface.
   *
   * env: SCRATCH_A / SCRATCH_B = "k=v;k=v" conf sets applied before each
   * side's pass; SPARK_GRAFT_ITERS pairs (default 5). args = query regexes.
@@ -26,13 +24,7 @@ object ScratchStream {
       case Nil => List("q62_ssj")
       case xs  => xs
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.Tables.all.foreach { t =>
       graft.sources.Tables.load(spark, sfDir, t).count()

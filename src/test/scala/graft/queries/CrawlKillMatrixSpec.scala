@@ -108,6 +108,17 @@ class CrawlKillMatrixSpec extends SparkSuite {
     }
   }
 
+  test("an eagerly spawned server child that is never run exits on destroy") {
+    // the c15 gate's failure path: generation 1 throws after spawnEager,
+    // run() never sends the command, and the booted child would block on
+    // stdin for the rest of the parent JVM's life
+    val pending = graft.tools.CrawlResumeChild.spawnEager()
+    Thread.sleep(2000) // let the child boot past JVM start
+    val t0 = System.nanoTime()
+    assert(pending.destroy(), "the child was still alive 10 s after destroy")
+    assert(System.nanoTime() - t0 < 10L * 1000000000L)
+  }
+
   test("mid-fold kill: index committed, hits MV unborn — resume must not double-fold") {
     killPoint("foldkill", "forge:bm25_fold", "HALTING at bm25_fold", "")
   }

@@ -224,6 +224,45 @@ class TextAnalysisSpec extends SparkSuite {
     }
   }
 
+  test("gopher line/alpha signals are row-identical to the higher-order forms") {
+    // the original higher-order filter() forms (CodegenFallback, hence
+    // replaced) are the reference; the shipped literal-replace/regex forms
+    // must match them row for row on the fixture corpus — given bullet-
+    // and ellipsis-led lines at the fixture's frequent " a " and " the "
+    // — and on adversarial rows the fixture
+    // vocabulary cannot produce ("x...\ny" is ONE space-split word that a
+    // \n-normalizing draft double-counted; bullets and ellipses at text
+    // edges; all-symbol words; empty text)
+    val docs = graft.sources.Tables.load(spark, sf0001, "documents")
+      .select(col("doc_id"), replace(replace(col("text"), lit(" a "),
+        lit("\n• ")), lit(" the "), lit("...\n")).as("text"))
+    val adversarial = Seq(
+      (900000001L, "x...\ny plain words here"),
+      (900000002L, "• leads\n- dashes\nz...\nw..."),
+      (900000003L, "## #### ##"),
+      (900000004L, "tail..."),
+      (900000005L, ""),
+      (900000006L, "a...\nb...\nc...\nd")).toDF("doc_id", "text")
+    val base = docs.unionByName(adversarial)
+    val signals = Seq("doc_id", "bullet_ratio", "ellipsis_ratio", "alpha_ratio")
+    val shipped = TextAnalysis.gopherRules(base, "text").select(signals.map(col): _*)
+    val t = col("text")
+    val ws = split(t, " ")
+    val lines = split(t, "\n")
+    val hof = base
+      .withColumn("bullet_ratio", round(size(filter(lines, l =>
+        l.startsWith("•") || l.startsWith("- "))).cast("double") / size(lines), 6))
+      .withColumn("ellipsis_ratio", round(size(filter(lines,
+        _.endsWith("..."))).cast("double") / size(lines), 6))
+      .withColumn("alpha_ratio", round(size(filter(ws,
+        _.rlike("[A-Za-z]"))).cast("double") / size(ws), 6))
+      .select(signals.map(col): _*)
+    assert(docs.filter(col("text").contains("...\n") &&
+      col("text").contains("\n• ")).count() > 100)
+    val diff = shipped.exceptAll(hof).unionByName(hof.exceptAll(shipped))
+    assert(diff.isEmpty, s"shipped != HOF on: ${diff.collect().mkString("; ")}")
+  }
+
   test("NULL text gets definite quality/gopher flags, never a vanishing NULL") {
     val rows = Seq((1L, "the a of and to in is it that for real words here"),
       (2L, null.asInstanceOf[String]), (3L, "")).toDF("doc_id", "text")

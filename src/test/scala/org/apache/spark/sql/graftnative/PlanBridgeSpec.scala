@@ -1,0 +1,57 @@
+package org.apache.spark.sql.graftnative
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.SparkSuite
+
+class PlanBridgeSpec extends SparkSuite {
+  import spark.implicits._
+
+  private def streamBuses(): Int =
+    spark.sparkContext.listenerBus.listeners.toArray
+      .count(_.isInstanceOf[StreamingQueryListenerBus])
+
+  test("a stream run on a session clone leaves no more listeners than a plain start, and no clone or conf") {
+    val dir = Files.createTempDirectory("graft-clone").toString
+    Seq((1L, 1L), (2L, 1L)).toDF("id", "seq").write.json(s"$dir/in")
+    val key = "spark.sql.shuffle.partitions"
+    val sessionValue = spark.conf.get(key)
+    def src = spark.readStream.schema("id BIGINT, seq BIGINT").json(s"$dir/in")
+      .dropDuplicates("id")
+    def runToEnd(df: DataFrame, cp: String) = {
+      val q = df.writeStream
+        .foreachBatch((b: DataFrame, _: Long) => b.count(): Unit)
+        .option("checkpointLocation", s"$dir/cp/$cp")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+    spark.streams // the session's own bus is there from the start
+    // Spark itself leaves one bus behind per started query (the query's
+    // internal session clone): that is the baseline a clone run must meet
+    val before = streamBuses()
+    runToEnd(src, "plain")
+    val plainLeak = streamBuses() - before
+    var clone = new java.lang.ref.WeakReference[AnyRef](null)
+    (1 to 3).foreach { i =>
+      val start = streamBuses()
+      val (onClone, detach) = PlanBridge.onClone(src, key, "1")
+      clone = new java.lang.ref.WeakReference(onClone.sparkSession)
+      assert(onClone.sparkSession ne spark)
+      assert(onClone.sparkSession.conf.get(key) == "1")
+      val q = try runToEnd(onClone, s"clone_$i") finally detach()
+      assert(q.lastProgress.stateOperators(0).numShufflePartitions == 1)
+      assert(spark.conf.get(key) == sessionValue)
+      assert(streamBuses() - start == plainLeak)
+    }
+    val deadline = System.nanoTime() + 20L * 1000000000L
+    while (clone.get != null && System.nanoTime() < deadline) {
+      System.gc(); Thread.sleep(100)
+    }
+    assert(clone.get == null, "the last session clone is still reachable")
+  }
+}
