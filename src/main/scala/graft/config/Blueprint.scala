@@ -91,7 +91,13 @@ object Blueprint {
       name: String,
       required: Seq[String],
       defaults: Map[String, String],
-      flowgroupSpecs: Seq[java.util.Map[String, Any]])
+      flowgroupSpecs: Seq[java.util.Map[String, Any]]) {
+    /** Each spec as YAML source, dumped once per parsed document. */
+    lazy val specTexts: Seq[String] = {
+      val yaml = new Yaml()
+      flowgroupSpecs.map(yaml.dump(_))
+    }
+  }
 
   def parseBlueprintDoc(yamlText: String): BlueprintDoc = {
     val root = new Yaml().load[Any](yamlText).asInstanceOf[java.util.Map[String, Any]]
@@ -126,15 +132,21 @@ object Blueprint {
       presets: Map[String, String] = Map.empty,
       tokens: Map[String, String] = Map.empty,
       secrets: Substitution.SecretProvider = Substitution.envSecrets,
-      lenient: Boolean = false): Seq[FlowGroup] = {
+      lenient: Boolean = false): Seq[FlowGroup] =
+    expandWith(doc, params, new FlowGroupResolver.Docs(templates, presets), tokens,
+      secrets, lenient)
+
+  /** [[expandBlueprintDoc]] over a project's parse-once documents. */
+  private[config] def expandWith(doc: BlueprintDoc, params: Map[String, String],
+      docs: FlowGroupResolver.Docs, tokens: Map[String, String],
+      secrets: Substitution.SecretProvider, lenient: Boolean): Seq[FlowGroup] = {
     val missing = doc.required.filterNot(params.contains)
     if (missing.nonEmpty) throw YamlConfig.ConfigError(
       s"blueprint '${doc.name}' missing required parameter(s): ${missing.mkString(", ")}")
     val all = doc.defaults ++ params
-    val yaml = new Yaml()
-    doc.flowgroupSpecs.map { spec =>
-      val rendered = Substitution.substituteVarsPartial(yaml.dump(spec), all)
-      FlowGroupResolver.resolve(rendered, templates, presets, tokens, secrets, lenient)
+    doc.specTexts.map { text =>
+      val rendered = Substitution.substituteVarsPartial(text, all)
+      FlowGroupResolver.resolveWith(rendered, docs, tokens, secrets, lenient)
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.config
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.jdk.CollectionConverters._
 
 import org.yaml.snakeyaml.Yaml
@@ -77,6 +79,29 @@ object FlowGroupResolver {
       })
     }.toMap
 
+  /** One project's templates, preset chains and blueprints, each parsed
+    * (a preset chain: resolved) on first use and kept as long as the owner,
+    * a [[Project]] value. Safe to share across threads. A failed parse is
+    * never stored, so every flowgroup that names a broken document gets
+    * its error. */
+  final class Docs(templates: Map[String, String], presets: Map[String, String],
+      blueprints: Map[String, String] = Map.empty) {
+    private val parsedTemplates = new ConcurrentHashMap[String, Template]()
+    private val chains = new ConcurrentHashMap[Seq[String], Map[String, Any]]()
+    private val parsedBlueprints = new ConcurrentHashMap[String, Blueprint.BlueprintDoc]()
+
+    def template(name: String): Template =
+      parsedTemplates.computeIfAbsent(name, _ => parseTemplate(templates.getOrElse(name,
+        throw YamlConfig.ConfigError(s"unknown template '$name'"))))
+
+    def presetChain(names: Seq[String]): Map[String, Any] =
+      chains.computeIfAbsent(names, _ => resolvePresetChain(names, presets))
+
+    def blueprint(name: String): Option[Blueprint.BlueprintDoc] =
+      blueprints.get(name).map(text =>
+        parsedBlueprints.computeIfAbsent(name, _ => Blueprint.parseBlueprintDoc(text)))
+  }
+
   /** Resolve a flowgroup YAML document to a parsed FlowGroup.
     *
     * @param templates preset template documents by name
@@ -89,7 +114,13 @@ object FlowGroupResolver {
       presets: Map[String, String] = Map.empty,
       tokens: Map[String, String] = Map.empty,
       secrets: Substitution.SecretProvider = Substitution.envSecrets,
-      lenient: Boolean = false): FlowGroup = {
+      lenient: Boolean = false): FlowGroup =
+    resolveWith(yamlText, new Docs(templates, presets), tokens, secrets, lenient)
+
+  /** [[resolve]] over a project's parse-once [[Docs]]. */
+  private[config] def resolveWith(yamlText: String, docs: Docs,
+      tokens: Map[String, String], secrets: Substitution.SecretProvider,
+      lenient: Boolean): FlowGroup = {
     val yaml = new Yaml()
     val raw = javaToMap(yaml.load[Any](yamlText))
 
@@ -116,8 +147,7 @@ object FlowGroupResolver {
     val (withTemplate: Map[String, Any], templatePresets: Seq[String]) =
       raw.get("use_template") match {
         case Some(tName) =>
-          val tDoc = templates.getOrElse(tName.toString,
-            throw YamlConfig.ConfigError(s"unknown template '$tName'"))
+          val template = docs.template(tName.toString)
           val params = raw.get("template_parameters") match {
             case Some(m: java.util.Map[_, _]) => javaToMap(m).map { case (k, v) =>
               // a value-less parameter would substitute the literal text
@@ -131,7 +161,7 @@ object FlowGroupResolver {
             }
             case _ => Map.empty[String, String]
           }
-          val rendered = javaToMap(yaml.load[Any](renderTemplate(parseTemplate(tDoc), params)))
+          val rendered = javaToMap(yaml.load[Any](renderTemplate(template, params)))
           val tActions = rendered.get("actions").map(asList).getOrElse(Nil)
           val fgActions = raw.get("actions").map(asList).getOrElse(Nil)
           val merged = new java.util.ArrayList[Any]((tActions ++ fgActions).asJava)
@@ -148,7 +178,7 @@ object FlowGroupResolver {
     val mergedCfg = Seq(templatePresets, fgPresetNames)
       .filter(_.nonEmpty)
       .foldLeft(withTemplate) { (fg, chain) =>
-        applyPresetConfig(fg, resolvePresetChain(chain, presets))
+        applyPresetConfig(fg, docs.presetChain(chain))
       }
 
     // 4. token/secret substitution, textually over the re-serialized document

@@ -3,6 +3,7 @@ package graft.config
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.yaml.snakeyaml.Yaml
 
@@ -57,6 +58,10 @@ final case class Project(
       * result at run terminal state — see
       * [[graft.exec.TestReporters.loadProvider]]. */
     testReporting: Option[Project.TestReportingCfg] = None) {
+
+  /** This value's templates, preset chains and blueprints, each parsed once
+    * on first use and dropped with the value. */
+  private lazy val docs = new FlowGroupResolver.Docs(templates, presets, blueprints)
 
   /** The monitoring pipeline's name (reference default
     * `{project_name}_event_log_monitoring`) — what the sandbox resolver
@@ -166,26 +171,31 @@ final case class Project(
         s"unknown environment '$env'; have: ${substitutions.keys.toSeq.sorted.mkString(", ")}"))
 
   /** Resolve ONE pipeline file's flowgroups — exposed so tooling (the
-    * validate CLI) can attribute resolution errors to their source file. */
+    * validate CLI) can attribute resolution errors to their source file.
+    * The file's documents (`---` documents and `flowgroups:` entries)
+    * resolve in parallel; see [[Project.inOrder]] for why the results,
+    * warnings and errors still come out as a one-at-a-time pass would
+    * give them. */
   def resolvePipelineFile(p: Path, env: String, lenient: Boolean = false,
       secrets: Substitution.SecretProvider = Substitution.envSecrets): Seq[FlowGroup] = {
     val tokens: Map[String, String] = envTokens(env)
-    val text = Files.readString(p)
-    locally {
-      // split multi-flowgroup files into per-flowgroup documents, then run
-      // each through the full resolution pipeline (textual substitution
-      // requires source text, so re-dump each entry)
-      val yaml = new Yaml()
-      yaml.loadAll(text).asScala.filter(_ != null).flatMap { doc =>
+    // split multi-flowgroup files into per-flowgroup documents, then run
+    // each through the full resolution pipeline (textual substitution
+    // requires source text, so re-dump each entry); every document gets
+    // its own Yaml, which is not thread-safe
+    def resolveDoc(doc: AnyRef): FlowGroup =
+      FlowGroupResolver.resolveWith(new Yaml().dump(doc), docs, tokens, secrets, lenient)
+    val tasks: Seq[() => Seq[FlowGroup]] =
+      new Yaml().loadAll(Files.readString(p)).asScala.filter(_ != null).toSeq.flatMap { doc =>
         val m = doc.asInstanceOf[java.util.Map[String, Any]].asScala.toMap
           .map { case (k, v) => k.toString -> v }
         // blueprint instance file: use_blueprint + parameters (new shape) or
         // blueprint + flat top-level params (legacy shape)
         val instanceOf = m.get("use_blueprint").orElse(m.get("blueprint")).map(_.toString)
         instanceOf match {
-          case Some(bpName) =>
-            val bp = Blueprint.parseBlueprintDoc(blueprints.getOrElse(bpName,
-              throw YamlConfig.ConfigError(s"unknown blueprint '$bpName' (from $p)")))
+          case Some(bpName) => Seq { () =>
+            val bp = docs.blueprint(bpName).getOrElse(
+              throw YamlConfig.ConfigError(s"unknown blueprint '$bpName' (from $p)"))
             val params =
               if (m.contains("use_blueprint")) m.get("parameters") match {
                 case Some(pm: java.util.Map[_, _]) =>
@@ -193,24 +203,21 @@ final case class Project(
                 case _ => Map.empty[String, String]
               }
               else (m - "blueprint").map { case (k, v) => k -> String.valueOf(v) }
-            Blueprint.expandBlueprintDoc(bp, params, templates, presets, tokens,
-              secrets, lenient)
-          case None =>
-            val texts = m.get("flowgroups") match {
-              case Some(l: java.util.List[_]) => l.asScala.toSeq.map { e =>
-                val entry = e.asInstanceOf[java.util.Map[String, Any]]
-                val merged = new java.util.LinkedHashMap[String, Any]()
-                (m - "flowgroups").foreach { case (k, v) => merged.put(k, v) }
-                entry.asScala.foreach { case (k, v) => merged.put(k.toString, v) }
-                yaml.dump(merged)
-              }
-              case _ => Seq(yaml.dump(doc))
+            Blueprint.expandWith(bp, params, docs, tokens, secrets, lenient)
+          }
+          case None => m.get("flowgroups") match {
+            case Some(l: java.util.List[_]) => l.asScala.toSeq.map { e => () =>
+              val entry = e.asInstanceOf[java.util.Map[String, Any]]
+              val merged = new java.util.LinkedHashMap[String, Any]()
+              (m - "flowgroups").foreach { case (k, v) => merged.put(k, v) }
+              entry.asScala.foreach { case (k, v) => merged.put(k.toString, v) }
+              Seq(resolveDoc(merged))
             }
-            texts.map(t =>
-              FlowGroupResolver.resolve(t, templates, presets, tokens, secrets, lenient))
+            case _ => Seq(() => Seq(resolveDoc(doc)))
+          }
         }
-      }.toSeq
-    }
+      }
+    Project.inOrder(tasks).flatten
   }
 }
 
@@ -264,6 +271,23 @@ object Project {
       modulePath: String,
       functionName: String,
       configFile: Option[String] = None)
+
+  /** Run `tasks` on the parallel-collections pool (daemon threads, sized by
+    * the cores) and return their results in task order. Warnings a task
+    * raises are captured on its pool thread and replayed here, on the
+    * caller's thread, where a [[graft.Log.withSink]] scope lives; the first
+    * failing task's error is thrown after the warnings of the tasks before
+    * it, so callers see what a one-at-a-time pass would show. */
+  private def inOrder[A](tasks: Seq[() => A]): Seq[A] = {
+    import scala.collection.parallel.CollectionConverters._
+    tasks.par.map { task =>
+      val warnings = Vector.newBuilder[String]
+      (Try(graft.Log.withSink(w => { warnings += w; () })(task())), warnings.result())
+    }.seq.map { case (result, warnings) =>
+      warnings.foreach(graft.Log.warn)
+      result.get
+    }
+  }
 
   def load(dir: String): Project = {
     val root = Paths.get(dir)

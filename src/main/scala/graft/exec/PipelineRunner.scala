@@ -223,14 +223,11 @@ final class PipelineRunner(
     currentOpMeta = fg.operationalMetadata
     try {
       // dependency edges include views referenced inside SQL (Catalyst
-      // parse), so SQL-only consumers order and validate correctly. The
-      // parse is memoized per action: validate/order/refresh-target passes
-      // each consult it, and re-parsing the same SQL 3-5x per action is
-      // pure waste on metadata-plane latency.
-      val parsed = mutable.Map[String, Seq[String]]()
-      val inputs = (a: Action) => parsed.getOrElseUpdate(a.name,
-        graft.plan.DependencyAnalyzer.actionInputs(spark, a,
-          projectRoot = projectRoot))
+      // parse), so SQL-only consumers order and validate correctly; the
+      // parse is kept on each action, so the validate, order and
+      // refresh-target passes share it
+      val inputs = (a: Action) => graft.plan.DependencyAnalyzer.actionInputs(
+        spark, a, projectRoot = projectRoot)
       refreshTargetedLoads = computeRefreshTargetedLoads(fg, inputs)
       // opt-in per-action wall-clock lines (`spark.graft.timing=true`):
       // the profiling seam for locating which ACTION dominates a pipeline

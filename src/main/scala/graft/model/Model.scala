@@ -58,9 +58,21 @@ sealed trait Action {
   def dependsOn: Seq[String]
   /** All dependency inputs: declared sources plus explicit depends_on. */
   final def inputNames: Seq[String] = (sources ++ dependsOn).distinct
+
+  /** [[graft.plan.DependencyAnalyzer.actionInputs]]'s last result for this
+    * action, so the planner and the flowgroup graph share one SQL parse.
+    * Not a constructor field: equality, hashCode and `copy` ignore it, and
+    * it is freed with the action. */
+  @transient @volatile private[graft] var inputsSlot: Action.Inputs = null
 }
 
 object Action {
+  /** One stored input list and the key it was derived under: the session's
+    * SQL parser, `trustDependsOn` and the project root `sql_path`
+    * resolves against. */
+  private[graft] final class Inputs(val parser: AnyRef, val trustDependsOn: Boolean,
+      val projectRoot: String, val names: Seq[String])
+
   /** Attach an operational-metadata selection to any action (the shared
     * field's counterpart to [[withDependsOn]]). */
   def withOperationalMetadata(a: Action, sel: Option[OpMeta]): Action =

@@ -89,17 +89,6 @@ object DependencyAnalyzer {
         "`depends_on` on the action.")
   }
 
-  /** Sources an action consumes: declared sources, tables referenced inside
-    * SQL (Catalyst parse), and explicit `depends_on` edges — the last being
-    * the only ordering signal for sources the analyzer CANNOT parse (a
-    * plugin/python transform reading a table directly).
-    *
-    * `trustDependsOn` (the reference dag CLI's `--trust-depends-on`,
-    * source_parsing.py:110-121): a non-empty `depends_on` becomes
-    * AUTHORITATIVE instead of additive — SQL extraction is skipped for
-    * that action and its inputs are exactly the declared `source:` refs
-    * unioned with `depends_on`. Actions without `depends_on` extract
-    * exactly as in the default mode. */
   /** The SQL text an action carries, for EXTRACTION purposes: inline
     * `sql` wins; an empty inline with a `sql_path` reads the file (direct
     * path, then projectRoot-relative — PipelineRunner.resolveFile's
@@ -117,8 +106,35 @@ object DependencyAnalyzer {
         .flatMap(f => Try(java.nio.file.Files.readString(f)).toOption)
     }
 
+  /** Sources an action consumes: declared sources, tables referenced inside
+    * SQL (Catalyst parse), and explicit `depends_on` edges — the last being
+    * the only ordering signal for sources the analyzer CANNOT parse (a
+    * plugin/python transform reading a table directly).
+    *
+    * `trustDependsOn` (the reference dag CLI's `--trust-depends-on`,
+    * source_parsing.py:110-121): a non-empty `depends_on` becomes
+    * AUTHORITATIVE instead of additive — SQL extraction is skipped for
+    * that action and its inputs are exactly the declared `source:` refs
+    * unioned with `depends_on`. Actions without `depends_on` extract
+    * exactly as in the default mode. */
   def actionInputs(spark: SparkSession, a: Action,
       trustDependsOn: Boolean = false, projectRoot: String = ""): Seq[String] = {
+    // one parse per action: the result is kept on the action under the
+    // session's parser and both options, and any other key derives afresh
+    val parser = spark.sessionState.sqlParser
+    val slot = a.inputsSlot
+    if (slot != null && (slot.parser eq parser) &&
+        slot.trustDependsOn == trustDependsOn && slot.projectRoot == projectRoot)
+      slot.names
+    else {
+      val names = deriveInputs(spark, a, trustDependsOn, projectRoot)
+      a.inputsSlot = new Action.Inputs(parser, trustDependsOn, projectRoot, names)
+      names
+    }
+  }
+
+  private def deriveInputs(spark: SparkSession, a: Action,
+      trustDependsOn: Boolean, projectRoot: String): Seq[String] = {
     val inputs =
       if (trustDependsOn && a.dependsOn.nonEmpty) a.inputNames
       else a match {
@@ -168,20 +184,28 @@ object DependencyAnalyzer {
     def nodes: Set[String] = edges.keySet ++ edges.values.flatten
 
     /** Kahn generations: each generation's nodes depend only on earlier
-      * generations; a cycle raises with the residual. */
+      * generations; a cycle raises with the residual. Linear in nodes plus
+      * edges: each node's unmet-dependency count drops as its dependencies
+      * are scheduled, so no generation rescans the graph. */
     def generations: Seq[Seq[String]] = {
-      var remaining = nodes.map(n => n -> edges.getOrElse(n, Set.empty).filter(nodes)).toMap
+      val unmet = scala.collection.mutable.HashMap[String, Int]()
+      nodes.foreach(n => unmet(n) = edges.getOrElse(n, Set.empty).size)
+      val dependents: Map[String, Seq[String]] = edges.toSeq
+        .flatMap { case (n, ds) => ds.toSeq.map(_ -> n) }
+        .groupMap(_._1)(_._2)
+      var ready = unmet.collect { case (n, 0) => n }.toSeq.sorted
       val out = Seq.newBuilder[Seq[String]]
-      while (remaining.nonEmpty) {
-        val ready = remaining.collect {
-          case (n, ds) if ds.forall(d => !remaining.contains(d)) => n
-        }.toSeq.sorted
-        if (ready.isEmpty)
-          throw Planner.PlanError(graft.ErrorCodes.DEP_002(
-            s"flowgroup dependency cycle: ${remaining.keys.toSeq.sorted.mkString(", ")}"))
+      while (ready.nonEmpty) {
         out += ready
-        remaining = remaining -- ready
+        ready.foreach(unmet.remove)
+        ready = ready.flatMap(dependents.getOrElse(_, Nil)).filter { n =>
+          unmet(n) -= 1
+          unmet(n) == 0
+        }.sorted
       }
+      if (unmet.nonEmpty)
+        throw Planner.PlanError(graft.ErrorCodes.DEP_002(
+          s"flowgroup dependency cycle: ${unmet.keys.toSeq.sorted.mkString(", ")}"))
       out.result()
     }
   }
