@@ -1365,8 +1365,8 @@ final class PipelineRunner(
     * be reconstructed from the log — the basis of version_as_of. */
   private def logChanges(a: StreamingTableWrite, batch: DataFrame,
       mergeOpts: Option[ScdMerge.Options],
-      txn: Option[(String, Long)] = None): Option[ChangeCommit] =
-    if (!a.changeLog) None else {
+      txn: Option[(String, Long)] = None): Unit =
+    if (a.changeLog) {
     val chTable = s"${a.table}__changes"
     // foreachBatch replay of a FULLY-committed batch (crash after commit,
     // before the checkpoint marker): the txn sidecar says this (flow,
@@ -1375,7 +1375,7 @@ final class PipelineRunner(
     // via this skip: their txn line was not written, and the intent-marker
     // probe below stays loud for them.
     val txnId = txn.map { case (flow, id) => s"$flow#$id" }
-    if (txnId.exists(committedTxnsCached(chTable).contains)) return None
+    if (txnId.exists(committedTxnsCached(chTable).contains)) return
     // serialize the replay spec FIRST: its separator-name guard must fire
     // before any rows land in the log
     val spec = replaySpec(mergeOpts)
@@ -1399,19 +1399,10 @@ final class PipelineRunner(
     if (store.getMeta(chTable, "commit_intent").isDefined)
       assertLogIntegrity(chTable, s"write '${a.name}'", force = true)
     store.setMeta(chTable, "commit_intent", version.toString)
-    val (nDel, nTrunc) =
-      try commitChangeRows(a, chTable, version, batch, mergeOpts, spec, txnId)
-      catch { case e: Throwable => uncacheIntegrity(chTable); throw e }
-    Some(ChangeCommit(chTable, version, nDel, nTrunc))
+    try commitChangeRows(a, chTable, version, batch, mergeOpts, spec, txnId)
+    catch { case e: Throwable => uncacheIntegrity(chTable); throw e }
     }
   }
-
-  /** One completed change-log commit, with the delete/truncate-hit counts
-    * observed on the append itself — the seam that lets the tombstone
-    * machinery reuse the durably-written log rows instead of re-scanning
-    * (and checkpointing) the batch plan a second time. */
-  private final case class ChangeCommit(table: String, version: Long,
-      nDeletes: Option[Long], nTruncates: Option[Long])
 
   /** The append + sidecar sequence of one change-log commit; any throw
     * inside leaves the intent marker set (cleared last) and the caller
@@ -1419,38 +1410,23 @@ final class PipelineRunner(
   private def commitChangeRows(a: StreamingTableWrite, chTable: String,
       version: Long, batch: DataFrame,
       mergeOpts: Option[ScdMerge.Options], spec: String,
-      txnId: Option[String] = None): (Option[Long], Option[Long]) = {
+      txnId: Option[String] = None): Unit = {
     val deleteExpr = mergeOpts.flatMap(_.applyAsDeletes)
-    val truncExpr = mergeOpts.flatMap(_.applyAsTruncates)
-    // the delete-ONLY probe (commit-kind decision below), the delete count,
-    // and the truncate-hit count all ride the append itself as observed
-    // metrics — each was otherwise one more full pass over the batch per
-    // microbatch (guide §1.2); Observation is valid here because the
-    // append is a BATCH action inside foreachBatch. The counts feed the
-    // tombstone machinery (mergeInto), which then derives its candidate
-    // set from the just-written log rows instead of re-scanning the batch.
-    val wantKind = mergeOpts.exists(_.scdType == 1) && deleteExpr.isDefined
-    val obsMetrics = {
-      val b = Seq.newBuilder[org.apache.spark.sql.Column]
-      if (wantKind)
-        b += count(when(!(expr(deleteExpr.get) <=> lit(true)), 1)).as("__n_nondel")
-      deleteExpr.foreach(d =>
-        b += count(when(expr(d) <=> lit(true), 1)).as("__n_del"))
-      truncExpr.foreach(t =>
-        b += count(when(expr(t) <=> lit(true), 1)).as("__n_trunc"))
-      b.result()
-    }
-    val delProbe =
-      if (obsMetrics.nonEmpty)
-        Some(new org.apache.spark.sql.Observation(
-          s"graft_commitkind_${version}_${java.util.UUID.randomUUID()}"))
-      else None
+    // an SCD1 delete predicate decides the commit kind (below) from the
+    // batch's count of non-delete rows, observed on the append itself — a
+    // separate probe was one more full pass over the batch per microbatch
+    // (guide §1.2); Observation is valid here because the append is a
+    // BATCH action inside foreachBatch
+    val kindProbe = deleteExpr.filter(_ => mergeOpts.exists(_.scdType == 1))
+      .map(d => (!(expr(d) <=> lit(true)), new org.apache.spark.sql.Observation(
+        s"graft_commitkind_${version}_${java.util.UUID.randomUUID()}")))
     val logged = batch
       .withColumn("_change_type",
         when(deleteExpr.map(expr).getOrElse(lit(false)), "delete").otherwise("upsert"))
       .withColumn("_commit_version", lit(version))
-    store.append(chTable, delProbe.fold(logged)(o =>
-      logged.observe(o, obsMetrics.head, obsMetrics.tail: _*)))
+    store.append(chTable, kindProbe.fold(logged) { case (nonDel, o) =>
+      logged.observe(o, count(when(nonDel, 1)).as("__n_nondel"))
+    })
     // sidecars advance only AFTER the rows are durably appended — the old
     // counter-first ordering let a crashed append leave a phantom empty
     // latest version, and version_as_of at it silently returned the
@@ -1479,32 +1455,25 @@ final class PipelineRunner(
     // probe's is-empty answer. The wait is BOUNDED: if the listener event
     // is ever dropped (listener-bus overflow) or a future append change
     // short-circuits the write action, a blocked `get` would hang the
-    // microbatch forever — after the deadline fall back to direct probes
-    // of the (persisted) batch instead.
-    val observed: Map[String, Any] = delProbe.fold(Map.empty[String, Any]) { o =>
-      try {
-        scala.concurrent.Await.ready(o.future,
-          scala.concurrent.duration.Duration(60, "s"))
-        o.get // ready above → no block
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          graft.Log.warn(s"commit-kind observation for '${a.name}' never " +
-            "fired within 60 s — falling back to direct batch probes")
-          Map.empty[String, Any]
+    // microbatch forever — after the deadline fall back to one direct
+    // probe of the (persisted) batch instead.
+    val deleteOnly = kindProbe.exists { case (nonDel, o) =>
+      val observed =
+        try {
+          scala.concurrent.Await.ready(o.future,
+            scala.concurrent.duration.Duration(60, "s"))
+          o.get.get("__n_nondel") // ready above → no block
+        } catch {
+          case _: java.util.concurrent.TimeoutException =>
+            graft.Log.warn(s"commit-kind observation for '${a.name}' never " +
+              "fired within 60 s — falling back to a direct batch probe")
+            None
+        }
+      observed match {
+        case Some(n: Long) => n == 0L
+        case _ => batch.filter(nonDel).isEmpty
       }
     }
-    def observedCount(key: String)(fallback: => Long): Option[Long] =
-      observed.get(key) match {
-        case Some(n: Long) => Some(n)
-        case _ if delProbe.isDefined => Some(fallback) // timeout fallback
-        case _ => None
-      }
-    val deleteOnly = wantKind && observedCount("__n_nondel")(
-      batch.filter(!(expr(deleteExpr.get) <=> lit(true))).count()).contains(0L)
-    val nDel = deleteExpr.map(d => observedCount("__n_del")(
-      batch.filter(expr(d) <=> lit(true)).count()).get)
-    val nTrunc = truncExpr.map(t => observedCount("__n_trunc")(
-      batch.filter(expr(t) <=> lit(true)).count()).get)
     store.recordCommitKind(chTable, version,
       if (mergeOpts.isEmpty) "append"
       else if (deleteOnly) "delete"
@@ -1527,7 +1496,6 @@ final class PipelineRunner(
     // finds the log clean, and partial ts/kind sidecar coverage is caught
     // loudly by their own readers)
     store.deleteMeta(chTable, "commit_intent")
-    (nDel, nTrunc)
   }
 
   /** How `<table>__changes` replays into a point-in-time state:
@@ -2349,7 +2317,7 @@ final class PipelineRunner(
       mutable.Set.from(store.committedTxns(chTable)))
 
   /** Materialize a write batch consumed by MULTIPLE actions — the
-    * change-log append, the delete-kind probe, the tombstone candidate
+    * change-log append, the tombstone candidate checkpoint and truncate
     * probe, and the merge's own staged write each run the batch's plan.
     * Without the persist every consumer recomputes it from scratch: a file
     * stream re-reads the microbatch's files once per consumer, and a
@@ -2431,8 +2399,8 @@ final class PipelineRunner(
         StreamTuning.run(src, merges = true)(_
           .foreachBatch { (batch: DataFrame, id: Long) =>
             withBatchMaterialized(batch, reused = true) { b =>
-              val ch = logChanges(a, b, Some(opts), Some((flowKey, id)))
-              mergeInto(a, b, opts, ch)
+              logChanges(a, b, Some(opts), Some((flowKey, id)))
+              mergeInto(a, b, opts)
             }
             hooks.onBatchCommitted(currentPipeline, currentFlowgroup, a.table, id)
           }
@@ -2440,8 +2408,8 @@ final class PipelineRunner(
           .trigger(Trigger.AvailableNow()))
       case (Some(_), false) =>
         withBatchMaterialized(src, reused = true) { b =>
-          val ch = logChanges(a, b, scdOpts)
-          mergeInto(a, b, scdOpts.get, ch)
+          logChanges(a, b, scdOpts)
+          mergeInto(a, b, scdOpts.get)
         }
       case (Some(_), true) if a.snapshotFunction.isDefined =>
         // snapshot-polling CDC: drain the source function until caught up,
@@ -2462,8 +2430,8 @@ final class PipelineRunner(
           val changes = SnapshotCdc.diff(store.readIfExists(a.table), snap, opts)
           val mergeOpts = SnapshotCdc.mergeOptions(opts)
           withBatchMaterialized(changes, reused = true) { b =>
-            val ch = logChanges(a, b, Some(mergeOpts))
-            mergeInto(a, b, mergeOpts, ch)
+            logChanges(a, b, Some(mergeOpts))
+            mergeInto(a, b, mergeOpts)
           }
           store.setMeta(a.table, "snapshot_version", version.toString)
           last = Some(version)
@@ -2476,8 +2444,8 @@ final class PipelineRunner(
         val changes = SnapshotCdc.diff(store.readIfExists(a.table), src, scdOpts.get)
         val mergeOpts = SnapshotCdc.mergeOptions(scdOpts.get)
         withBatchMaterialized(changes, reused = true) { b =>
-          val ch = logChanges(a, b, Some(mergeOpts))
-          mergeInto(a, b, mergeOpts, ch)
+          logChanges(a, b, Some(mergeOpts))
+          mergeInto(a, b, mergeOpts)
         }
       case (None, _) if src.isStreaming =>
         // exactly-once under crash: foreachBatch replay lands the batch at
@@ -2489,7 +2457,7 @@ final class PipelineRunner(
           .foreachBatch { (batch: DataFrame, id: Long) =>
             // reused only when a change log rides beside the table append
             withBatchMaterialized(batch, reused = a.changeLog) { b =>
-              logChanges(a, b, None, Some((flowKey, id))): Unit
+              logChanges(a, b, None, Some((flowKey, id)))
               store.appendBatch(a.table,
                 clustered(b, a.clusterColumns, a.clusterStrategy),
                 flowKey, id, a.partitionColumns)
@@ -2500,7 +2468,7 @@ final class PipelineRunner(
           .trigger(Trigger.AvailableNow()))
       case (None, _) =>
         withBatchMaterialized(src, reused = a.changeLog) { b =>
-          logChanges(a, b, None): Unit
+          logChanges(a, b, None)
           store.append(a.table, clustered(b, a.clusterColumns, a.clusterStrategy), a.partitionColumns)
         }
     }
@@ -2611,7 +2579,7 @@ final class PipelineRunner(
     * at 100 TB reads and moves 50, not the whole table. Truncates clear the
     * whole target by definition, so they fall back to a full replace. */
   private def mergeInto(a: StreamingTableWrite, batch: DataFrame,
-      opts: ScdMerge.Options, chCommit: Option[ChangeCommit] = None): Unit = {
+      opts: ScdMerge.Options): Unit = {
     val partCols = a.partitionColumns
     // Deletes that left no row behind persist in the `<table>__tombstones`
     // companion (keys + delete sequence; small — standing deletes only)
@@ -2636,7 +2604,7 @@ final class PipelineRunner(
     // until the next delete-carrying batch; skipping keeps delete-free
     // microbatches at zero companion overhead
     val tombCandidates =
-      if (trackTombs) tombstoneCandidates(batch, opts, priorTombs, chCommit)
+      if (trackTombs) tombstoneCandidates(batch, opts, priorTombs)
       else None
     def merge(t: Option[DataFrame]): DataFrame =
       if (opts.scdType == 1) ScdMerge.scd1(t, batch, opts, priorTombs)
@@ -2675,35 +2643,14 @@ final class PipelineRunner(
     * be computable after the live replace invalidates the batch's own
     * lineage; candidate sets are delete-rows-sized, not batch-sized. None
     * when the batch carries no deletes and no prior-clearing truncate —
-    * nothing to add, and retirement can wait (see mergeInto). */
+    * nothing to add, and retirement can wait (see mergeInto). Derived from
+    * the batch alone, so every CDC write takes this one path: with or
+    * without a change log, and on a foreachBatch replay whose log commit
+    * the txn sidecar skipped. */
   private def tombstoneCandidates(batch: DataFrame, opts: ScdMerge.Options,
-      priorTombs: Option[DataFrame],
-      chCommit: Option[ChangeCommit] = None): Option[DataFrame] = {
+      priorTombs: Option[DataFrame]): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
     val seqAll = (opts.keys ++ opts.sequenceBy).distinct
-    // FUSED path — the batch was just durably appended to the change log
-    // with `_change_type` computed from the SAME delete predicate and the
-    // delete/truncate-hit counts observed ON that append: the candidate
-    // set is a pushdown-pruned read of the log rows at this version (a
-    // stable file read the live replace below cannot invalidate), so the
-    // batch plan is never re-scanned and nothing needs checkpointing —
-    // delete-free batches pay ZERO probe jobs (the counts rode the
-    // append). Gates without a change log keep the checkpoint path below.
-    chCommit match {
-      case Some(ci) if ci.nDeletes.isDefined =>
-        val hasDels = ci.nDeletes.exists(_ > 0)
-        val hasTruncate = ci.nTruncates.exists(_ > 0)
-        if (!hasDels && !(hasTruncate && priorTombs.nonEmpty)) return None
-        val batchDels = store.read(ci.table)
-          .filter(col("_commit_version") === ci.version &&
-            col("_change_type") === "delete")
-          .select(seqAll.map(col): _*)
-        return Some((priorTombs.filter(_ => !hasTruncate) match {
-          case Some(ts) => batchDels.unionByName(ts.select(seqAll.map(col): _*))
-          case None => batchDels
-        }).dropDuplicates(seqAll))
-      case _ =>
-    }
     val delPred = opts.applyAsDeletes.map(p => coalesce(expr(p), lit(false)))
       .getOrElse(lit(false))
     // ONE scan of the batch plan: materialize the (delete-rows-sized) set,

@@ -679,4 +679,77 @@ class ChangeLogSpec extends SparkSuite {
           |""".stripMargin).actions.head))
     assert(e.getMessage.contains("skipChangeCommits"), e.getMessage)
   }
+
+  test("a delete-carrying CDC refresh scans no change-log file") {
+    // tombstone candidates come from the batch itself, so a refresh of a
+    // change-log table reads none of the log's files: the cost of a
+    // delete-carrying batch does not grow with the log's commit count
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.lit
+    val dir = Files.createTempDirectory("graft-cdf-scan").toString
+    val store = new TableStore(spark, s"$dir/wh")
+    val runner = new PipelineRunner(spark, store, s"$dir/cp")
+    val landing = s"$dir/landing"
+    val yaml =
+      s"""pipeline: p
+         |flowgroup: f
+         |actions:
+         |  - name: l
+         |    type: load
+         |    source: {type: cloudfiles, path: $landing, format: json, readMode: stream,
+         |             table_schema: "k BIGINT, seq BIGINT, v STRING"}
+         |    target: v_ch
+         |  - name: w
+         |    type: write
+         |    source: v_ch
+         |    write_target: {type: streaming_table, table: scan_t, change_log: true}
+         |    cdc_config: {keys: [k], sequence_by: seq, scd_type: 2,
+         |                 apply_as_deletes: "v = 'DEL'"}
+         |""".stripMargin
+    // refresh i opens key i and deletes key i - 1
+    def refresh(i: Long): Unit = {
+      Seq((i, 10 * i, "up"), (i - 1, 10 * i, "DEL")).toDF("k", "seq", "v")
+        .write.mode("append").json(landing)
+      runner.run(YamlConfig.parseFlowGroup(yaml))
+    }
+    (1L to 10L).foreach(refresh)
+    assert(store.read("scan_t__changes").select("_commit_version").distinct().count() == 10)
+
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    val marker = s"graft_sentinel_${java.util.UUID.randomUUID()}"
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener
+        with AdaptiveSparkPlanHelper {
+      private def scanRoots(plan: SparkPlan): Unit = foreach(plan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths
+          .foreach(p => roots.add(java.nio.file.Paths.get(p.toUri.getPath)))
+        case m: InMemoryTableScanExec => scanRoots(m.relation.cachedPlan)
+        case _ =>
+      }
+      override def onSuccess(funcName: String, qe: QueryExecution, duration: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) sentinelSeen.countDown()
+        else scanRoots(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      refresh(11L)
+      // delivery is asynchronous but in order: once the sentinel's own
+      // event arrives, every execution of the refresh has been seen
+      spark.range(1).select(lit(marker).as("m")).collect()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel query's execution event never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    def under(t: String) =
+      roots.asScala.filter(_.startsWith(java.nio.file.Paths.get(store.path(t)).toAbsolutePath))
+    assert(under("scan_t").nonEmpty, s"the refresh's merge scan was not captured: $roots")
+    assert(under("scan_t__changes").isEmpty,
+      s"the refresh scanned the change log: ${under("scan_t__changes").mkString(", ")}")
+    // and the refresh applied: key 11 open, key 10 closed at 110
+    assert(store.read("scan_t").filter("k >= 10").select("k", "__end_at")
+      .as[(Long, Option[Long])].collect().toSet == Set((10L, Some(110L)), (11L, None)))
+  }
 }

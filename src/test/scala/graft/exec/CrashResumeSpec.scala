@@ -93,6 +93,60 @@ class CrashResumeSpec extends SparkSuite {
     assert(store.read("t__changes").count() == 4)
   }
 
+  private def scd1DeletesYaml(landing: String): String =
+    s"""pipeline: cr
+       |flowgroup: scd1
+       |actions:
+       |  - name: l
+       |    type: load
+       |    source: {type: cloudfiles, path: $landing, format: json, readMode: stream,
+       |              table_schema: "id BIGINT, seq BIGINT, v STRING"}
+       |    target: v_ch
+       |  - name: w
+       |    type: write
+       |    source: v_ch
+       |    write_target: {type: streaming_table, table: dim, change_log: true}
+       |    cdc_config: {keys: [id], sequence_by: seq, scd_type: 1,
+       |                 apply_as_deletes: "v = 'DEL'"}
+       |""".stripMargin
+
+  test("a replayed delete batch keeps its tombstones (change log commit skipped)") {
+    // the replay's change-log commit is skipped by the txn sidecar, so its
+    // tombstone candidates must come from the re-delivered batch itself
+    val batches = Seq(
+      Seq((1L, 1L, "a"), (2L, 1L, "x")),
+      Seq((1L, 5L, "DEL"), (3L, 2L, "c")))
+    def state(store: TableStore): (Set[(Long, Long, String)], Set[(Long, Long)]) = (
+      store.read("dim").select("id", "seq", "v").as[(Long, Long, String)].collect().toSet,
+      store.read("dim__tombstones").select("id", "seq").as[(Long, Long)].collect().toSet)
+    def feed(runner: PipelineRunner, landing: String, rows: Seq[(Long, Long, String)]): Unit = {
+      rows.toDF("id", "seq", "v").write.mode("append").json(landing)
+      runner.run(YamlConfig.parseFlowGroup(scd1DeletesYaml(landing)))
+    }
+    // reference: the same batches without a crash
+    val (refRunner, refStore, refDir) = freshRunner()
+    batches.foreach(feed(refRunner, s"$refDir/landing", _))
+
+    val (runner, store, dir) = freshRunner()
+    val landing = s"$dir/landing"
+    batches.foreach(feed(runner, landing, _))
+    // crash state: the delete batch committed the merge, the tombstones and
+    // the change log, but its checkpoint commit marker was lost
+    dropNewestCommit(s"$dir/checkpoints/cr/scd1/w")
+    runner.run(YamlConfig.parseFlowGroup(scd1DeletesYaml(landing)))
+    assert(Files.exists(Paths.get(s"$dir/checkpoints/cr/scd1/w/commits/1")),
+      "the delete batch was not re-delivered")
+    assert(store.committedTxns("dim__changes").size == 2)
+    assert(store.read("dim__changes").select("_commit_version").distinct().count() == 2,
+      "the replay logged its batch a second time")
+    assert(state(store) == state(refStore))
+    assert(state(store)._2 == Set((1L, 5L)))
+    // a late event below the replayed delete stays dead
+    feed(runner, landing, Seq((1L, 3L, "stale")))
+    assert(store.read("dim").select("id").as[Long].collect().toSet == Set(2L, 3L),
+      "a late event below the replayed delete resurrected the key")
+  }
+
   test("replay after a partial physical append converges (no stale attempt files)") {
     val (_, store, dir) = freshRunner()
     // first attempt of (flow, batch 0) crashes mid-move: simulate by an

@@ -324,66 +324,80 @@ class PipelineRunnerSpec extends SparkSuite {
     // late event BELOW a delete's sequence wins against the emptied
     // target on the next microbatch and the key silently resurrects —
     // diverging from DLT and from this engine's own time-travel replay.
-    val (runner, store, dir) = freshRunner()
-    val landing = s"$dir/tomb_landing"
-    def yaml = s"""pipeline: p
-         |flowgroup: fg
-         |actions:
-         |  - name: l
-         |    type: load
-         |    source:
-         |      type: cloudfiles
-         |      path: $landing
-         |      format: json
-         |      readMode: stream
-         |      table_schema: "id BIGINT, seq BIGINT, v STRING"
-         |    target: v_ch
-         |  - name: w
-         |    type: write
-         |    source: v_ch
-         |    write_target: {type: streaming_table, table: dim}
-         |    cdc_config:
-         |      keys: [id]
-         |      sequence_by: seq
-         |      scd_type: 1
-         |      apply_as_deletes: "v = 'DEL'"
-         |""".stripMargin
-    def run(rows: (Long, Long, String)*): Unit = {
-      rows.toSeq.toDF("id", "seq", "v").write.mode("append").json(landing)
-      runner.run(YamlConfig.parseFlowGroup(yaml))
+    // Both write shapes run the same steps: the tombstone candidates come
+    // from the batch alone, whether or not a change log rides beside it.
+    for (changeLog <- Seq(false, true)) withClue(s"change_log: $changeLog: ") {
+      val (runner, store, dir) = freshRunner()
+      val landing = s"$dir/tomb_landing"
+      def yaml = s"""pipeline: p
+           |flowgroup: fg
+           |actions:
+           |  - name: l
+           |    type: load
+           |    source:
+           |      type: cloudfiles
+           |      path: $landing
+           |      format: json
+           |      readMode: stream
+           |      table_schema: "id BIGINT, seq BIGINT, v STRING"
+           |    target: v_ch
+           |  - name: w
+           |    type: write
+           |    source: v_ch
+           |    write_target: {type: streaming_table, table: dim, change_log: $changeLog}
+           |    cdc_config:
+           |      keys: [id]
+           |      sequence_by: seq
+           |      scd_type: 1
+           |      apply_as_deletes: "v = 'DEL'"
+           |      apply_as_truncates: "v = 'TRUNC'"
+           |""".stripMargin
+      def run(rows: (Long, Long, String)*): Unit = {
+        rows.toSeq.toDF("id", "seq", "v").write.mode("append").json(landing)
+        runner.run(YamlConfig.parseFlowGroup(yaml))
+      }
+      def live: Set[(Long, String)] =
+        store.read("dim").select("id", "v").as[(Long, String)].collect().toSet
+      def tombs: Set[(Long, Long)] = store.read("dim__tombstones")
+        .select("id", "seq").as[(Long, Long)].collect().toSet
+      run((1L, 1L, "a"), (2L, 1L, "x"))
+      assert(store.exists("dim__changes") == changeLog)
+      run((1L, 5L, "DEL"))
+      assert(live == Set((2L, "x")))
+      // the standing delete persists in the companion
+      assert(tombs == Set((1L, 5L)), "expected the standing tombstone")
+      // LATE event below the delete: key stays dead (the pre-fix fold
+      // resurrected it with the stale value)
+      run((1L, 3L, "stale"))
+      assert(live == Set((2L, "x")),
+        "a late event below the standing delete resurrected the key")
+      // a genuinely newer event wins and the key returns; the now-stale
+      // tombstone is HARMLESS (it can never outrank the newer live row)
+      // and retirement is LAZY — delete-free batches skip the companion
+      // rewrite entirely, so it still stands here...
+      run((1L, 7L, "new"))
+      assert(live == Set((1L, "new"), (2L, "x")))
+      // ...and even while stale, late events below the live row stay late
+      run((1L, 4L, "stale2"))
+      assert(live == Set((1L, "new"), (2L, "x")))
+      // the next DELETE-carrying batch (any key) refreshes the companion,
+      // retiring the superseded tombstone
+      run((2L, 8L, "DEL"))
+      assert(live == Set((1L, "new")))
+      assert(tombs == Set((2L, 8L)),
+        "the delete-carrying batch must retire the superseded tombstone " +
+          "and record its own")
+      // a truncate clears the prior table AND the standing tombstones:
+      // the companion holds only this batch's own delete afterwards
+      run((9L, 9L, "TRUNC"), (3L, 10L, "z"), (4L, 11L, "DEL"))
+      assert(live == Set((3L, "z")))
+      assert(tombs == Set((4L, 11L)),
+        "a truncate batch must leave only its own deletes in the companion")
+      // the cleared tombstone no longer outranks a late event below it,
+      // while the batch's own delete still does
+      run((2L, 5L, "late"), (4L, 6L, "late"))
+      assert(live == Set((2L, "late"), (3L, "z")))
     }
-    def live: Set[(Long, String)] =
-      store.read("dim").select("id", "v").as[(Long, String)].collect().toSet
-    run((1L, 1L, "a"), (2L, 1L, "x"))
-    run((1L, 5L, "DEL"))
-    assert(live == Set((2L, "x")))
-    // the standing delete persists in the companion
-    val tombs = store.read("dim__tombstones").select("id", "seq")
-      .as[(Long, Long)].collect().toSet
-    assert(tombs == Set((1L, 5L)), s"expected the standing tombstone, got $tombs")
-    // LATE event below the delete: key stays dead (the pre-fix fold
-    // resurrected it with the stale value)
-    run((1L, 3L, "stale"))
-    assert(live == Set((2L, "x")),
-      "a late event below the standing delete resurrected the key")
-    // a genuinely newer event wins and the key returns; the now-stale
-    // tombstone is HARMLESS (it can never outrank the newer live row)
-    // and retirement is LAZY — delete-free batches skip the companion
-    // rewrite entirely, so it still stands here...
-    run((1L, 7L, "new"))
-    assert(live == Set((1L, "new"), (2L, "x")))
-    // ...and even while stale, late events below the live row stay late
-    run((1L, 4L, "stale2"))
-    assert(live == Set((1L, "new"), (2L, "x")))
-    // the next DELETE-carrying batch (any key) refreshes the companion,
-    // retiring the superseded tombstone
-    run((2L, 8L, "DEL"))
-    assert(live == Set((1L, "new")))
-    val tombs2 = store.read("dim__tombstones").select("id", "seq")
-      .as[(Long, Long)].collect().toSet
-    assert(tombs2 == Set((2L, 8L)),
-      s"the delete-carrying batch must retire the superseded tombstone " +
-        s"and record its own: $tombs2")
   }
 
   test("property: scd1/scd2 CDC fold over UNORDERED batches == one-shot merge") {
