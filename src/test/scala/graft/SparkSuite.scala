@@ -4,19 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs. */
+/** Shared local session for specs: the session the engine ships. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   lazy val sf0001 = "/root/testdata/sf0.001"
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    GraftSession.builder("local[4]").appName("graft-test").getOrCreate()
 }

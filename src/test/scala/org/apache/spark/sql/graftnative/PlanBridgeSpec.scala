@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBu
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
+import graft.exec.StreamTuning
 
 class PlanBridgeSpec extends SparkSuite {
   import spark.implicits._
@@ -31,8 +32,11 @@ class PlanBridgeSpec extends SparkSuite {
       q
     }
     spark.streams // the session's own bus is there from the start
-    // Spark itself leaves one bus behind per started query (the query's
-    // internal session clone): that is the baseline a clone run must meet
+    // Spark leaves one bus behind per start of a stateful query: its
+    // operators reach the state-store coordinator through the query
+    // manager of the query's internal session clone, whose bus is never
+    // removed (a stateless start leaves none; see the next test). A plain
+    // start of this dedup is the baseline a clone run must meet
     val before = streamBuses()
     runToEnd(src, "plain")
     val plainLeak = streamBuses() - before
@@ -53,5 +57,24 @@ class PlanBridgeSpec extends SparkSuite {
       System.gc(); Thread.sleep(100)
     }
     assert(clone.get == null, "the last session clone is still reachable")
+  }
+
+  test("100 plain stream starts leave as many stream listener buses as 1 start") {
+    val dir = Files.createTempDirectory("graft-bus").toString
+    Seq((1L, 1L)).toDF("id", "seq").write.json(s"$dir/in")
+    // a stateless plan derives no partition count, so every start is
+    // plain: the query starts from the caller's session, not a clone.
+    // Every runner stream of a medallion refresh (appends, CDC merges) is
+    // of this kind
+    def start(i: Int): Unit =
+      StreamTuning.run(spark.readStream.schema("id BIGINT, seq BIGINT").json(s"$dir/in"),
+        merges = false)(_
+        .foreachBatch((b: DataFrame, _: Long) => b.count(): Unit)
+        .option("checkpointLocation", s"$dir/cp/$i")
+        .trigger(Trigger.AvailableNow()))
+    start(1)
+    val afterOne = streamBuses()
+    (2 to 100).foreach(start)
+    assert(streamBuses() == afterOne)
   }
 }
